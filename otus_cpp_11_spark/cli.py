@@ -20,6 +20,13 @@ import sys
 from pathlib import Path
 
 
+def _non_negative_int(text: str) -> int:
+    value = int(text)
+    if value < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {value}")
+    return value
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="otus-cpp-11-spark",
@@ -32,7 +39,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--out", default=None, help="optional output dir for iter{L}/result.txt files")
     p.add_argument(
         "--max-len",
-        type=int,
+        type=_non_negative_int,
         default=None,
         help="search cap (reference hard-codes 3, src/main.cpp:61; default: longest line)",
     )
@@ -56,7 +63,6 @@ def main(argv: list[str] | None = None) -> int:
     lines = spark.read.text(args.input).repartition(args.mappers)
     log.debug("input=%s mappers=%d reducers=%d", args.input, args.mappers, args.reducers)
 
-    found: list[int] = []
     if args.out:
         outdir = Path(args.out)
 
@@ -64,8 +70,6 @@ def main(argv: list[str] | None = None) -> int:
             d = outdir / f"iter{length}"
             d.mkdir(parents=True, exist_ok=True)
             (d / "result.txt").write_text(f"{int(unique)}\n")
-            if unique:
-                found.append(length)
 
         result = min_unique_prefix_length(
             spark, lines, max_len=args.max_len, on_iteration=_on_iter

@@ -6,8 +6,13 @@ our argparse surface, including the per-iteration output layout
 from __future__ import annotations
 
 import pytest
+from conftest import NUMBERS69
 
 from otus_cpp_11_spark.cli import build_parser, main
+
+# minimal unique prefix 6 with a 16-character longest line: the search
+# brackets it between 4 and 8 and resolves 5..7 in its second round
+DEEP6 = ["abcde1xxxxxxxxxx", "abcde2", "b", "c"]
 
 
 @pytest.fixture(autouse=True)
@@ -43,3 +48,29 @@ def test_cli_duplicate_lines_exit_code(spark, tmp_path, capsys):
     rc = main(["-i", str(f)])
     assert rc == 1
     assert "not found" in capsys.readouterr().out
+
+
+@pytest.mark.parametrize(
+    "lines, answer",
+    [(NUMBERS69, 2), (DEEP6, 6)],
+    ids=["numbers69", "deep6"],
+)
+def test_cli_iter_layout_from_written_fixture(spark, tmp_path, capsys, lines, answer):
+    """The golden layout without the reference's own test.txt: the fixture
+    is written to a temp file, and iter1..answer-1 read 0, iter{answer}
+    reads 1, with no file past the answer."""
+    f = tmp_path / "lines.txt"
+    f.write_text("\n".join(lines) + "\n")
+    out = tmp_path / "out"
+    assert main(["-i", str(f), "--out", str(out)]) == 0
+    assert f"Result = {answer}" in capsys.readouterr().out
+    want = {f"iter{n}": "0\n" for n in range(1, answer)}
+    want[f"iter{answer}"] = "1\n"
+    assert {p.parent.name: p.read_text() for p in out.glob("iter*/result.txt")} == want
+
+
+def test_parser_rejects_negative_max_len(capsys):
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(["-i", "x.txt", "--max-len", "-1"])
+    assert "--max-len" in capsys.readouterr().err
+    assert build_parser().parse_args(["-i", "x.txt", "--max-len", "0"]).max_len == 0

@@ -8,7 +8,12 @@ digits, L=2 is unique (/root/reference/test.txt; expected behavior SURVEY.md
 
 from __future__ import annotations
 
+import pytest
+from conftest import NUMBERS69
+
+from otus_cpp_11_spark import prefix
 from otus_cpp_11_spark.prefix import (
+    duplicate_prefix_lengths,
     has_duplicate_prefix,
     min_unique_prefix_length,
     min_unique_prefix_length_single_pass,
@@ -72,3 +77,55 @@ class TestAdversarial:
         the O1/O2 line-text source path (SURVEY.md §2 O1-O2)."""
         df = spark.read.text("/root/reference/test.txt")
         assert min_unique_prefix_length(spark, df) == 2
+
+
+class TestBatchedSearch:
+    def test_duplicate_prefix_lengths_batch(self, lines_numbers69):
+        assert duplicate_prefix_lengths(lines_numbers69, "value", [1, 2], 3) == {1}
+
+    def test_guard_marks_every_length(self, spark):
+        # "ab" twice never reaches L=4 on its own; the guard at 5 catches it
+        df = spark.createDataFrame([("ab",), ("ab",), ("xyz12",)], ["value"])
+        assert duplicate_prefix_lengths(df, "value", [4], 5) == {4, 5}
+
+    def test_length_above_guard_rejected(self, lines_numbers69):
+        with pytest.raises(ValueError):
+            duplicate_prefix_lengths(lines_numbers69, "value", [4], 3)
+
+    def test_negative_max_len_rejected(self, spark):
+        df = spark.createDataFrame([("solo",)], ["value"])
+        with pytest.raises(ValueError):
+            min_unique_prefix_length(spark, df, max_len=-1)
+
+    @pytest.mark.parametrize(
+        "lines, max_len, answer",
+        [
+            (["apple", "banana", "cherry"], None, 1),
+            (NUMBERS69, None, 2),
+            (["abc1zzzzzz", "abc2", "x"], None, 4),
+            (["abcdefg1", "abcdefg2", "b"], None, 8),
+            (["abcde1", "abcde2"], None, 6),
+            (["abcde1", "abcde2", "q"], 6, 6),
+            (["alpha", "alpha", "beta"], None, None),
+            (["abcde1", "abcde2"], 3, None),
+        ],
+        ids=["one", "two", "pow2", "pow2-cap", "cap", "explicit-cap",
+             "dup-lines", "cap-too-short"],
+    )
+    def test_at_most_two_rounds(self, spark, monkeypatch, lines, max_len, answer):
+        calls = []
+
+        def counted(df, col, lengths, max_len):
+            calls.append((list(lengths), max_len))
+            return duplicate_prefix_lengths(df, col, lengths, max_len)
+
+        monkeypatch.setattr(prefix, "duplicate_prefix_lengths", counted)
+        df = spark.createDataFrame([(v,) for v in lines], ["value"])
+        replay = []
+        got = min_unique_prefix_length(
+            spark, df, max_len=max_len, on_iteration=lambda n, u: replay.append((n, u))
+        )
+        assert got == answer
+        assert 1 <= len(calls) <= 2, calls
+        want = [] if answer is None else [(n, n == answer) for n in range(1, answer + 1)]
+        assert replay == want

@@ -45,6 +45,38 @@ def test_prefix_matches_bruteforce(spark, lines):
     assert min_unique_prefix_length(spark, df) == brute_min_unique_prefix(lines)
 
 
+def brute_capped_min_unique_prefix(lines: list[str], cap: int | None) -> int | None:
+    """First L <= cap (default: the longest line) at which every L-prefix is
+    unique, else None."""
+    if cap is None:
+        cap = max(len(s) for s in lines)
+    for L in range(1, cap + 1):
+        if len({s[:L] for s in lines}) == len(lines):
+            return L
+    return None
+
+
+# lines 0-20 characters over "ab"; the shared-stem branch pushes the answer
+# deep enough that the search needs its second, bracketed round
+ab_lines_strategy = st.one_of(
+    st.lists(st.text(alphabet="ab", max_size=20), min_size=1, max_size=12),
+    st.builds(
+        lambda stem, tails: [stem + t for t in tails],
+        st.text(alphabet="ab", max_size=15),
+        st.lists(st.text(alphabet="ab", max_size=5), min_size=1, max_size=12),
+    ),
+)
+
+
+@given(lines=ab_lines_strategy, max_len=st.one_of(st.none(), st.integers(1, 25)))
+@settings(**{**SETTINGS, "max_examples": 25})
+def test_prefix_capped_matches_bruteforce(spark, lines, max_len):
+    df = spark.createDataFrame([(v,) for v in lines], "value string")
+    assert min_unique_prefix_length(spark, df, max_len=max_len) == (
+        brute_capped_min_unique_prefix(lines, max_len)
+    )
+
+
 @given(
     left=st.lists(
         st.tuples(st.integers(0, 2), st.integers(0, 100)), min_size=1, max_size=8
