@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark import TaskContext
 
 from otus_cpp_11_spark.mapreduce import (
     MapReduceJob,
@@ -21,6 +22,15 @@ INTS_ABS = [1, 6, 3, -7, 2, 15, -10, -1, 3, 2, -3, 7, -2, 15, 10]  # 7 unique |x
 
 def lines_df(spark, values):
     return spark.createDataFrame([(str(v),) for v in values], ["value"])
+
+
+def lines_source(spark, tmp_path, kind, values):
+    """The same lines as a DataFrame source or as a text-file path."""
+    if kind == "dataframe":
+        return spark.createDataFrame([(v,) for v in values], "value string")
+    path = tmp_path / "lines.txt"
+    path.write_text("".join(f"{v}\n" for v in values))
+    return str(path)
 
 
 class TestReferenceProgram:
@@ -87,6 +97,39 @@ class TestFrameworkContract:
         }
         assert counts == {"a": 3, "b": 2}
 
+    @pytest.mark.parametrize("kind", ["dataframe", "path"])
+    def test_empty_input_gives_r_partitions(self, spark, tmp_path, kind):
+        source = lines_source(spark, tmp_path, kind, [])
+        job = MapReduceJob(mappers=3, reducers=2)
+        job.set_mapper(lambda line: [(line, 1)])
+        job.set_reducer(make_adjacent_dup_reducer())
+        assert job._shuffled(spark, source).getNumPartitions() == 2
+        out = tmp_path / "out"
+        result = job.run(spark, source, str(out))
+        assert result.ok and result.reducer_votes == [True, True]
+        votes = sorted(p.name for p in (out / "reducer").glob("reduce.*.txt"))
+        assert votes == ["reduce.0.txt", "reduce.1.txt"]
+
+    def test_path_source_matches_read_text(self, spark, tmp_path):
+        # CRLF endings, a non-ASCII line and an empty line must reach the
+        # mapper exactly as spark.read.text delivers them
+        path = tmp_path / "crlf.txt"
+        path.write_bytes("alpha\r\nbeta\r\n\r\ndéjà-vu\r\nalphabet\r\n".encode())
+        job = MapReduceJob(mappers=3, reducers=2)
+        job.set_mapper(lambda line: [(line[:5], 1)])
+        job.set_reducer(make_adjacent_dup_reducer())
+
+        def counts(source):
+            return sorted(tuple(r) for r in job.run_counts(spark, source).collect())
+
+        df = spark.read.text(str(path))
+        assert counts(str(path)) == counts(df) == [
+            ("", 1), ("alpha", 2), ("beta", 1), ("déjà-", 1)
+        ]
+        assert job.run(spark, str(path)).ok is job.run(spark, df).ok is False
+        job.set_mapper(lambda line: [(line, 1)])
+        assert job.run(spark, str(path)).ok is job.run(spark, df).ok is True
+
     def test_unset_functions_raise(self, spark, lines_trivial):
         job = MapReduceJob()
         with pytest.raises(RuntimeError):
@@ -100,6 +143,32 @@ class TestFrameworkContract:
             MapReduceJob(mappers=0)
         with pytest.raises(ValueError):
             MapReduceJob(reducers=0)
+
+
+class TestSingleMapPass:
+    """The mapper runs once per input line on the executors (the reference
+    maps each line once, runner.cpp:14-29); its driver-side calls only
+    pick the reducers' range bounds."""
+
+    @pytest.mark.parametrize("kind", ["dataframe", "path"])
+    @pytest.mark.parametrize("combine", [False, True])
+    @pytest.mark.parametrize("reducers", [1, 2, 3])
+    def test_one_executor_call_per_line(self, spark, tmp_path, kind, combine, reducers):
+        values = [f"{i:04d}" for i in range(300)]
+        calls = spark.sparkContext.accumulator(0)
+
+        def mapper(line):
+            if TaskContext.get() is not None:
+                calls.add(1)
+            return [(line[:3], 1)]
+
+        job = MapReduceJob(mappers=3, reducers=reducers)
+        job.set_mapper(mapper)
+        job.set_reducer(make_adjacent_dup_reducer())
+        if combine:
+            job.set_combiner()
+        assert job.run(spark, lines_source(spark, tmp_path, kind, values)).ok is False
+        assert calls.value == len(values)
 
 
 class TestLectureTasks:

@@ -7,10 +7,14 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from otus_cpp_11_spark.mapreduce import MapReduceJob
+from otus_cpp_11_spark.mapreduce import (
+    MapReduceJob,
+    make_adjacent_dup_reducer,
+    make_prefix_mapper,
+)
 from otus_cpp_11_spark.ops.joins import asof_join
 from otus_cpp_11_spark.prefix import min_unique_prefix_length
 
@@ -134,6 +138,41 @@ def test_mapreduce_word_count_matches_counter(spark, lines):
     # r["count"] not r.count — Row.count is the tuple method
     got = {r.key: r["count"] for r in job.run_counts(spark, df).collect()}
     assert got == dict(want)
+
+
+@given(
+    lines=st.lists(st.text(alphabet="abc", max_size=4), max_size=12),
+    mappers=st.integers(1, 4),
+    reducers=st.integers(1, 4),
+    as_path=st.booleans(),
+)
+@example(lines=[], mappers=3, reducers=2, as_path=False)
+@example(lines=[], mappers=3, reducers=2, as_path=True)
+@example(lines=["ab", "", "abc", "b", ""], mappers=2, reducers=4, as_path=True)
+@settings(**SETTINGS)
+def test_mapreduce_range_shuffle_matches_bruteforce(
+    spark, tmp_path, lines, mappers, reducers, as_path
+):
+    """For any input and M, R: exactly R sorted partitions in global key
+    order, no key in two partitions, and the run's verdict equals "every
+    mapped key occurs once"."""
+    if as_path:
+        path = tmp_path / f"lines-{len(list(tmp_path.iterdir()))}.txt"
+        path.write_text("".join(f"{v}\n" for v in lines))
+        source = str(path)
+    else:
+        source = spark.createDataFrame([(v,) for v in lines], "value string")
+    job = MapReduceJob(mappers=mappers, reducers=reducers)
+    job.set_mapper(make_prefix_mapper(2))
+    job.set_reducer(make_adjacent_dup_reducer())
+    keys = [v[:2] for v in lines]
+
+    parts = [[k for k, _ in p] for p in job._shuffled(spark, source).glom().collect()]
+    assert len(parts) == reducers
+    flat = [k for p in parts for k in p]
+    assert flat == sorted(keys)
+    assert sum(len(set(p)) for p in parts) == len(set(keys))
+    assert job.run(spark, source).ok is (len(set(keys)) == len(keys))
 
 
 @given(
