@@ -1307,6 +1307,205 @@ KNN_QUERY_MOD = 20  # vec_id % 20 == 0 -> the query subset (1/20 of the table)
 KNN_TOPK = 3
 
 
+# ---------------------------------------------------------------------------
+# Retrieval-evaluation core of the recall gates. A ranker is a DataFrame of
+# scored candidates; a gate ranks it per query, ranks exact ground truth the
+# same way, and counts the hits. Overlap gates join two ranked (query,
+# neighbour) relations; stacked gates rank every metric of one scored pass.
+
+
+def _rank_top(scored: DataFrame, k: int, score: Column | str) -> DataFrame:
+    """(query_id, nid) of each query's k first rows of ``scored``
+    (query_id, nid, score) ordered by ``score``, ties broken by nid."""
+    w = Window.partitionBy("query_id").orderBy(score, "nid")
+    return (
+        scored.select("query_id", "nid", F.row_number().over(w).alias("rnk"))
+        .where(F.col("rnk") <= k)
+        .select("query_id", "nid")
+    )
+
+
+def _knn_cosine_top(pairs: DataFrame) -> DataFrame:
+    """(query_id, nid) top-{KNN_TOPK} by cosine of query x candidate
+    ``pairs`` carrying (query_id, qv, qn) and (nid, cv, cn), the norms
+    computed per side; self-pairs are excluded."""
+    scored = pairs.where(F.col("nid") != F.col("query_id")).select(
+        "query_id",
+        "nid",
+        cosine_from_norms(
+            _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
+        ).alias("cosine"),
+    )
+    return _rank_top(scored, KNN_TOPK, F.desc("cosine"))
+
+
+def _knn_exact_top(e: DataFrame, eligible: DataFrame | None = None) -> DataFrame:
+    """Exact ground truth of the k-NN gates: (query_id, nid) of the
+    top-{KNN_TOPK} cosine neighbours of every {KNN_QUERY_MOD}th vector,
+    brute force over the whole corpus or over the ``eligible`` vec_ids.
+
+    Each norm is folded once in its side's projection and combined by
+    ``cosine_from_norms``, whose operand order keeps every cosine
+    bit-identical to ``cosine_sim`` and so to the oracles' fused form."""
+    q = e.where(F.col("vec_id") % KNN_QUERY_MOD == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("qn"),
+    )
+    if eligible is not None:
+        e = e.join(eligible, "vec_id", "left_semi")
+    cand = e.select(
+        F.col("vec_id").alias("nid"),
+        F.col("embedding").alias("cv"),
+        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
+    )
+    return _knn_cosine_top(q.crossJoin(cand))
+
+
+def _overlap_recall(
+    exact_top: DataFrame, approx_top: DataFrame, *by: str
+) -> DataFrame:
+    """Overlap of an approximate top-k with the exact top-k, per ``by``
+    group (pooled over all rows when no group is given): n_overlap
+    counts the exact (query_id, nid) rows that the two-column (query,
+    neighbour) ``approx_top`` also returned, and recall divides it by
+    the exact row count, not by k, so a query with fewer than k exact
+    neighbours is scored on what was achievable."""
+    hit = approx_top.toDF("l_qid", "l_nid")
+    return (
+        exact_top.join(
+            hit,
+            (F.col("query_id") == F.col("l_qid"))
+            & (F.col("nid") == F.col("l_nid")),
+            "left",
+        )
+        .groupBy(*by)
+        .agg(
+            F.count("l_nid").alias("n_overlap"),
+            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias("recall"),
+        )
+    )
+
+
+def _stacked_recall(
+    scored: DataFrame,
+    order: Column,
+    k: int,
+    truth: str,
+    variants: list[tuple[str, str, str]],
+) -> DataFrame:
+    """Per-qid recall@k of several rankings against a ground-truth one,
+    all from ONE scored relation of stacked (qid, vec_id, metric, score)
+    rows: each (qid, metric) keeps its top k by ``order`` (ties broken
+    by vec_id), and a vec_id in the ``truth`` top-k is a hit for every
+    metric that ranked it too. ``variants`` lists (metric, n_hits alias,
+    recall alias); the output is qid, then every n_hits, then every
+    recall (= n_hits / k), in that order."""
+    from otus_cpp_11_spark.ops.skew import salted_topk
+
+    topk = salted_topk(
+        scored, ["qid", "metric"], [order, F.col("vec_id")], k, salt_on="vec_id"
+    )
+    metrics = [truth] + [m for m, _, _ in variants]
+    hits = (
+        topk.groupBy("qid", "vec_id")
+        .agg(*[F.max(F.col("metric") == m).alias(f"in_{m}") for m in metrics])
+        .where(f"in_{truth}")
+    )
+    n_hits = {m: F.sum(F.col(f"in_{m}").cast("bigint")) for m, _, _ in variants}
+    return hits.groupBy("qid").agg(
+        *[n_hits[m].alias(n) for m, n, _ in variants],
+        *[
+            (n_hits[m].cast("double") / F.lit(float(k))).alias(r)
+            for m, _, r in variants
+        ],
+    )
+
+
+def _eval_queries(src: DataFrame):
+    """(qids, qmat) of the PQ eval queries, vec_id in [PQ_CODEBOOK,
+    PQ_CODEBOOK + PQ_RQ_N) of ``src``: an int64 id vector and a float64
+    (query, dim) matrix. Bounded collect: PQ_RQ_N rows."""
+    import numpy as np
+
+    qrows = (
+        src.where(
+            (F.col("vec_id") >= PQ_CODEBOOK)
+            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
+        )
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
+    qmat = np.array(
+        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
+    )
+    return qids, qmat
+
+
+def _pq_adc_scored(src: DataFrame, qids, qmat, variants: list) -> DataFrame:
+    """Stacked (vec_id, qid, metric, d) distances of every ``src``
+    candidate to every eval query, scored in ONE Arrow pass: metric
+    "exact" is the fixed-point squared L2, and each variant (metric,
+    slices, perm) is PQ ADC under that codebook, with candidate and
+    query dims reordered by ``perm`` first (None: no reordering) —
+    codes by ``_pq_encode_np``, distances from each query's exact
+    integer ADC table. Self-pairs are dropped."""
+    import numpy as np
+    import pandas as pd
+
+    books = []
+    for metric, slices, perm in variants:
+        qp = qmat if perm is None else qmat[:, perm]
+        tables = np.array(
+            [_pq_dtable_slices(slices, list(q)) for q in qp], dtype=np.int64
+        )  # (NQ, S, K)
+        books.append((metric, _pq_slice_mat(slices), tables, perm))
+
+    def score(batches):
+        for pdf in batches:
+            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            vid = pdf["vec_id"].to_numpy()
+            n = emb.shape[0]
+            # per-element floor BEFORE the sum (the decimal recipe);
+            # terms < 2^53 so float64 floor is exact, totals in int64
+            diffs = emb[:, None, :] - qmat[None, :, :]  # n x NQ x dim
+            dists = [
+                (
+                    "exact",
+                    np.floor(diffs * diffs * float(PQ_SCALE))
+                    .astype(np.int64)
+                    .sum(axis=2),
+                )
+            ]
+            for metric, cmat, tables, perm in books:
+                codes = _pq_encode_np(emb if perm is None else emb[:, perm], cmat)
+                adc = np.zeros((n, len(qids)), dtype=np.int64)
+                for s in range(PQ_SUBVECTORS):
+                    adc += tables[:, s, :][:, codes[:, s]].T  # NQ lookups
+                dists.append((metric, adc))
+            yield pd.concat(
+                [
+                    pd.DataFrame(
+                        {
+                            "vec_id": np.repeat(vid, len(qids)),
+                            "qid": np.tile(qids, n),
+                            "metric": metric,
+                            "d": d.reshape(-1),
+                        }
+                    )
+                    for metric, d in dists
+                ],
+                ignore_index=True,
+            )
+
+    return (
+        spread(src.select("vec_id", "embedding"))
+        .mapInPandas(score, "vec_id bigint, qid bigint, metric string, d bigint")
+        .where(F.col("vec_id") != F.col("qid"))
+    )
+
+
 @register(
     "knn_join_lsh_top3",
     oracle=f"""
@@ -1455,12 +1654,6 @@ def knn_recall_at_3(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate index quality (bucket-occupancy drift, plane staleness) — the
     same sample-probe pattern as the sketch accuracy gates."""
     e = load_table(spark, sf_dir, "embeddings")
-    # r14 (guide §2.3, the item-14 shape): per-side norms factored below
-    # the joins — both arms score corpus x query-sample pairs, so the old
-    # fused cosine_sim re-ran the query self-fold once per corpus row and
-    # the candidate self-fold once per query; one fold per pair remains.
-    # Operand order via cosine_from_norms matches cosine_sim(cv, qv)
-    # bit-for-bit (oracle unchanged, re-proven).
     q = e.where(F.col("vec_id") % KNN_QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qv"),
@@ -1473,55 +1666,9 @@ def knn_recall_at_3(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bucket_col(F.col("embedding")).alias("bucket"),
         F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(cand)
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
-    )
-    lsh_top = (
-        q.join(
-            cand,
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("nid") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select(F.col("query_id").alias("l_qid"), F.col("nid").alias("l_nid"))
-    )
-    return (
-        exact_top.join(
-            lsh_top,
-            (F.col("query_id") == F.col("l_qid")) & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("l_nid").alias("n_overlap"),
-            # denominator = this query's EXACT top-k row count, not the
-            # constant k: if a query ever has fewer than k exact
-            # neighbors (tiny corpus, future KNN_QUERY_MOD change) the
-            # metric stays recall-of-achievable instead of silently
-            # understating (r5 ADVICE).
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias("recall"),
-        )
-        .orderBy("query_id")
+    lsh_top = _knn_cosine_top(q.join(cand, F.col("bucket") == F.col("qbucket")))
+    return _overlap_recall(_knn_exact_top(e), lsh_top, "query_id").orderBy(
+        "query_id"
     )
 
 
@@ -1775,18 +1922,8 @@ def ann_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first-stage candidate generation this eval justifies would run
     over the IVF/PQ index rather than brute force. Reference parity:
     extension mandate (LLM-pipeline battery)."""
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     tr = lambda c: F.slice(c, 1, TRUNC_DIM)  # noqa: E731
-    # r14 (guide §2.3, the item-14 shape): four of the six decimal folds
-    # per (query, candidate) pair were per-SIDE norms (full + truncated,
-    # each side) — the query norms re-ran once per corpus row and the
-    # candidate norms once per query. Factored into each side's
-    # projection, two folds per pair remain (the full and truncated
-    # dots). Operand order via cosine_from_norms matches
-    # cosine_sim(embedding, qv) / cosine_sim(tr(embedding), tr(qv))
-    # bit-for-bit (oracle unchanged, re-proven).
     qs = e.where(F.col("vec_id") < TRUNC_N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
@@ -1820,42 +1957,20 @@ def ann_truncated_dim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s_trunc"),
         )
     )
-    # BOTH rankings in one DAG branch: stack the two similarities into
-    # (metric, s) rows and rank per (qid, metric) — two independent
-    # salted_topk branches over the uncached `scored` would re-execute
-    # the dominant fixed-point scoring pass twice (r8 review finding).
-    # The recall join then collapses to a (qid, vec_id) flag aggregate:
-    # a vec_id in both metrics' top-k is a hit, and no self-join of the
-    # same lineage (which would also re-scan) ever forms.
+    # both rankings from one scoring pass: two salted_topk branches over
+    # the uncached `scored` would run the fixed-point scoring twice
     both = scored.selectExpr(
         "qid",
         "vec_id",
         "stack(2, 'full', s_full, 'trunc', s_trunc) AS (metric, s)",
     )
-    topk = salted_topk(
+    return _stacked_recall(
         both,
-        ["qid", "metric"],
-        [F.desc("s"), F.col("vec_id")],
+        F.desc("s"),
         TRUNC_RECALL_K,
-        salt_on="vec_id",
-    )
-    return (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "full").alias("in_full"),
-            F.max(F.col("metric") == "trunc").alias("in_trunc"),
-        )
-        .where("in_full")  # recall's denominator set
-        .groupBy("qid")
-        .agg(
-            F.sum(F.col("in_trunc").cast("bigint")).alias("n_hits"),
-            (
-                F.sum(F.col("in_trunc").cast("bigint")).cast("double")
-                / F.lit(float(TRUNC_RECALL_K))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("qid")
-    )
+        "full",
+        [("trunc", "n_hits", "recall_at_k")],
+    ).orderBy("qid")
 
 
 # --------------------------------------------------------------------------
@@ -2629,136 +2744,48 @@ ORDER BY e.qid
 """,
 )
 def pq_recall_trained_vs_init(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ codebook TRAINING with a recall gate (r8 verdict #4): the
-    codebook is trained to convergence-or-max_iters (``_pq_train``:
-    PQ_TRAIN_ITERS exact Lloyd refinements with an exact-fixed-point
-    convergence short-circuit; ``n_iters`` in the output is the count
-    the engine actually ran, and the oracle replays the early stop from
-    convergence flags). Per eval query: recall@k of ADC under the INIT
-    codebook (the counterfactual) vs the TRAINED codebook, against
-    exact squared-L2 ground truth — the quantifier-quality ablation
-    isolated at identical RAW geometry. (r11: the SERVED index moved to
-    residual codes — ``_pq_versioned_index`` — so serving-side recall
-    is now gated by ``pq_recall_residual_vs_raw``, which reads that
-    artifact; this eval keeps both of its sides inline, the honest
-    apples-to-apples raw-vs-raw comparison.) Every stage is fixed-point
-    exact (argmin assignment, decimal-mean update, integer ADC tables,
-    vec_id tie-breaks) — the whole eval is oracle-hashable, no RNG
-    anywhere.
+    """PQ codebook TRAINING with a recall gate: the codebook is trained
+    to convergence-or-max_iters (``_pq_train``: PQ_TRAIN_ITERS exact
+    Lloyd refinements with an exact-fixed-point convergence
+    short-circuit; ``n_iters`` in the output is the count the engine
+    actually ran, and the oracle replays the early stop from convergence
+    flags). Per eval query: recall@k of ADC under the INIT codebook (the
+    counterfactual) vs the TRAINED codebook, against exact squared-L2
+    ground truth — the quantifier-quality ablation isolated at identical
+    RAW geometry. (The SERVED index stores residual codes —
+    ``_pq_versioned_index`` — so serving-side recall is gated by
+    ``pq_recall_residual_vs_raw``, which reads that artifact; this eval
+    keeps both of its sides inline, the honest apples-to-apples
+    raw-vs-raw comparison.) Every stage is fixed-point exact (argmin
+    assignment, decimal-mean update, integer ADC tables, vec_id
+    tie-breaks) — the whole eval is oracle-hashable, no RNG anywhere.
 
     Plan: ONE Arrow-vectorized corpus pass scores exact + init +
-    trained distances per (query, candidate) — r11 folded the trained
-    side into the same pass, dropping a whole scan; per-(query, metric)
+    trained distances per (query, candidate); per-(query, metric)
     top-k via the skew-safe ``salted_topk``; the recall join touches
     3 * k * |queries| rows. At 100 TB: training cost is <=
     PQ_TRAIN_ITERS linear assignment passes plus a K x dim aggregate
     each (the IVF/k-means shape), eval queries stay bounded. Reference
     parity: extension mandate (LLM-pipeline battery)."""
-    import numpy as np
-    import pandas as pd
-
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     init = _pq_init_slices(e)
     trained, _curve, n_iters, _cvg = _pq_trained(spark, sf_dir)
-    ci = _pq_slice_mat(init)
-    ct = _pq_slice_mat(trained)
-    qrows = (
-        e.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array(
-        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
-    )
-    ti = np.array(
-        [_pq_dtable_slices(init, list(q)) for q in qmat], dtype=np.int64
-    )  # (NQ, S, K) ADC tables, exact ints
-    tt = np.array(
-        [_pq_dtable_slices(trained, list(q)) for q in qmat], dtype=np.int64
-    )
-
-    def score(batches):
-        for pdf in batches:
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy()
-            n = emb.shape[0]
-            codes_i = _pq_encode_np(emb, ci)
-            codes_t = _pq_encode_np(emb, ct)
-            # per-element floor BEFORE the sum (the decimal recipe);
-            # terms < 2^53 so float64 floor is exact, totals in int64
-            diffs = emb[:, None, :] - qmat[None, :, :]  # n x NQ x dim
-            exact = (
-                np.floor(diffs * diffs * float(PQ_SCALE))
-                .astype(np.int64)
-                .sum(axis=2)
-            )  # n x NQ
-            adc_i = np.zeros((n, len(qids)), dtype=np.int64)
-            adc_t = np.zeros((n, len(qids)), dtype=np.int64)
-            for s in range(PQ_SUBVECTORS):
-                adc_i += ti[:, s, :][:, codes_i[:, s]].T  # NQ lookups
-                adc_t += tt[:, s, :][:, codes_t[:, s]].T
-            frames = []
-            for metric, d in (
-                ("exact", exact),
-                ("init", adc_i),
-                ("trained", adc_t),
-            ):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(vid, len(qids)),
-                            "qid": np.tile(qids, n),
-                            "metric": metric,
-                            "d": d.reshape(-1),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored = (
-        spread(e.select("vec_id", "embedding"))
-        .mapInPandas(
-            score, "vec_id bigint, qid bigint, metric string, d bigint"
-        )
-        .where(F.col("vec_id") != F.col("qid"))
-    )
-    topk = salted_topk(
-        scored,
-        ["qid", "metric"],
-        [F.asc("d"), F.col("vec_id")],
-        PQ_RQ_K,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "init").alias("in_init"),
-            F.max(F.col("metric") == "trained").alias("in_trained"),
-        )
-        .where("in_exact")
+    qids, qmat = _eval_queries(e)
+    scored = _pq_adc_scored(
+        e, qids, qmat, [("init", init, None), ("trained", trained, None)]
     )
     return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("in_init").cast("bigint")).alias("n_hits_init"),
-            F.sum(F.col("in_trained").cast("bigint")).alias("n_hits_trained"),
-            (
-                F.sum(F.col("in_init").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_init"),
-            (
-                F.sum(F.col("in_trained").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_trained"),
-            F.lit(int(n_iters)).cast("bigint").alias("n_iters"),
+        _stacked_recall(
+            scored,
+            F.asc("d"),
+            PQ_RQ_K,
+            "exact",
+            [
+                ("init", "n_hits_init", "recall_init"),
+                ("trained", "n_hits_trained", "recall_trained"),
+            ],
         )
+        .select("*", F.lit(int(n_iters)).cast("bigint").alias("n_iters"))
         .orderBy("qid")
     )
 
@@ -2850,91 +2877,36 @@ ORDER BY e.qid
 """,
 )
 def pq_recall_residual_vs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The residual-encoding ablation the r10 verdict's top item asked
-    for: recall@k of IVF-PQ ADC over the SERVED versioned residual
-    index vs raw-vector PQ ADC at IDENTICAL geometry (same subvector
-    split, same codebook size, same training corpus — the pre-ingest
-    slice both pinned artifacts train on), both against exact
-    squared-L2 ground truth. Encoding residuals (vector − assigned
-    coarse centroid) concentrates the quantizer's dynamic range around
-    the cell centers — FAISS IndexIVFPQ's core trick — and this query
-    quantifies the gain per eval query; the residual side is scored at
-    FULL probe so the comparison isolates quantizer quality, not probe
-    loss. The residual side reads the one served artifact
+    """The residual-encoding ablation: recall@k of IVF-PQ ADC over the
+    SERVED versioned residual index vs raw-vector PQ ADC at IDENTICAL
+    geometry (same subvector split, same codebook size, same training
+    corpus — the pre-ingest slice both pinned artifacts train on), both
+    against exact squared-L2 ground truth. Encoding residuals (vector −
+    assigned coarse centroid) concentrates the quantizer's dynamic range
+    around the cell centers — FAISS IndexIVFPQ's core trick — and this
+    query quantifies the gain per eval query; the residual side is
+    scored at FULL probe so the comparison isolates quantizer quality,
+    not probe loss. The residual side reads the one served artifact
     (``_pq_versioned_index``); the raw side re-encodes inline in the
     same Arrow pass that scores exact ground truth (one corpus pass
     total); ranking joins touch k·|queries| rows. The oracle recomputes
     both trainings, both encodes, and both rankings from scratch."""
-    import numpy as np
-    import pandas as pd
-
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     raw, _, _, _ = _pq_trained(spark, sf_dir, pre_ingest=True)
     cents, _, _, _ = _ivf_trained(spark, sf_dir, pre_ingest=True)
     res, _, _, _ = _pq_trained_res(spark, sf_dir, pre_ingest=True)
-    cr = _pq_slice_mat(raw)
-    qrows = (
-        e.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array(
-        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
-    )
-    tr = np.array(
-        [_pq_dtable_slices(raw, list(q)) for q in qmat], dtype=np.int64
-    )  # (NQ, S, K) raw ADC tables, exact ints
-
-    def score(batches):
-        # exact ground truth + raw-PQ ADC in one Arrow pass (the raw
-        # side has no stored index — it is the counterfactual)
-        for pdf in batches:
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy()
-            n = emb.shape[0]
-            codes_r = _pq_encode_np(emb, cr)
-            diffs = emb[:, None, :] - qmat[None, :, :]
-            exact = (
-                np.floor(diffs * diffs * float(PQ_SCALE))
-                .astype(np.int64)
-                .sum(axis=2)
-            )
-            adc_r = np.zeros((n, len(qids)), dtype=np.int64)
-            for s in range(PQ_SUBVECTORS):
-                adc_r += tr[:, s, :][:, codes_r[:, s]].T
-            frames = []
-            for metric, d in (("exact", exact), ("raw", adc_r)):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(vid, len(qids)),
-                            "qid": np.tile(qids, n),
-                            "metric": metric,
-                            "d": d.reshape(-1),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored_er = spread(e.select("vec_id", "embedding")).mapInPandas(
-        score, "vec_id bigint, qid bigint, metric string, d bigint"
-    )
+    qids, qmat = _eval_queries(e)
+    # exact ground truth + raw-PQ ADC in one Arrow pass (the raw side has
+    # no stored index: it is the counterfactual)
+    scored_er = _pq_adc_scored(e, qids, qmat, [("raw", raw, None)])
     # residual side: per-cell table lookups over the SERVED index — the
     # artifact pq_adc_top10 / ivf_pq_top5 scan
     entries = [
         F.struct(
             F.lit(int(qid)).cast("bigint").alias("qid"),
-            _adc_expr_cells(
-                _pq_res_dtables(cents, res, [float(v) for v in qmat[j]])
-            ).alias("d"),
+            _adc_expr_cells(_pq_res_dtables(cents, res, qv)).alias("d"),
         )
-        for j, qid in enumerate(qids)
+        for qid, qv in zip(qids, qmat)
     ]
     scored_res = (
         _pq_index_df(spark, sf_dir)
@@ -2945,44 +2917,18 @@ def pq_recall_residual_vs_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("residual").alias("metric"),
             F.col("x.d").alias("d"),
         )
+        .where(F.col("vec_id") != F.col("qid"))
     )
-    scored = scored_er.unionByName(scored_res).where(
-        F.col("vec_id") != F.col("qid")
-    )
-    topk = salted_topk(
-        scored,
-        ["qid", "metric"],
-        [F.asc("d"), F.col("vec_id")],
+    return _stacked_recall(
+        scored_er.unionByName(scored_res),
+        F.asc("d"),
         PQ_RQ_K,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "raw").alias("in_raw"),
-            F.max(F.col("metric") == "residual").alias("in_residual"),
-        )
-        .where("in_exact")
-    )
-    return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("in_raw").cast("bigint")).alias("n_hits_raw"),
-            F.sum(F.col("in_residual").cast("bigint")).alias(
-                "n_hits_residual"
-            ),
-            (
-                F.sum(F.col("in_raw").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_raw"),
-            (
-                F.sum(F.col("in_residual").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_residual"),
-        )
-        .orderBy("qid")
-    )
+        "exact",
+        [
+            ("raw", "n_hits_raw", "recall_raw"),
+            ("residual", "n_hits_residual", "recall_residual"),
+        ],
+    ).orderBy("qid")
 
 
 IVF_PQ_NPROBES = (1, 2, 4, 8)  # the curve's probe widths (8 = full probe)
@@ -3100,35 +3046,19 @@ def ivf_pq_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     cents, _, _, _ = _ivf_trained(spark, sf_dir, pre_ingest=True)
     res, _, _, _ = _pq_trained_res(spark, sf_dir, pre_ingest=True)
-    qrows = (
-        e.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
+    qids, qmat = _eval_queries(e)
+    queries = [(int(qid), qv) for qid, qv in zip(qids, qmat.tolist())]
     qdf = F.broadcast(
-        spark.createDataFrame(
-            [
-                (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-                for r in qrows
-            ],
-            "qid bigint, qv array<double>",
-        )
+        spark.createDataFrame(queries, "qid bigint, qv array<double>")
     )
     # residual ADC of the whole index against every eval query: one
     # scan, per-(query, cell) tables as plan literals
     entries = [
         F.struct(
-            F.lit(int(r["vec_id"])).cast("bigint").alias("qid"),
-            _adc_expr_cells(
-                _pq_res_dtables(
-                    cents, res, [float(x) for x in r["embedding"]]
-                )
-            ).alias("d"),
+            F.lit(qid).cast("bigint").alias("qid"),
+            _adc_expr_cells(_pq_res_dtables(cents, res, qv)).alias("d"),
         )
-        for r in qrows
+        for qid, qv in queries
     ]
     scored = (
         _pq_index_df(spark, sf_dir)
@@ -4532,52 +4462,9 @@ def knn_ivfpq_recall_at_3(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift (centroid staleness after appends, nprobe sizing) — the same
     sample-probe pattern as the sketch accuracy gates."""
     e = load_table(spark, sf_dir, "embeddings")
-    # r14 (guide §2.3, the item-14 shape): per-side norms factored below
-    # the corpus x query-sample cross join — one fold per pair remains;
-    # operand order matches cosine_sim(cv, qv) bit-for-bit.
-    q = e.where(F.col("vec_id") % KNN_QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("qn"),
-    )
-    cand = e.select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("cv"),
-        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(cand)
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
-    )
-    ivf_top = _knn_ivfpq_ranked(spark, sf_dir).select(
-        F.col("query_id").alias("l_qid"), F.col("neighbor_id").alias("l_nid")
-    )
-    return (
-        exact_top.join(
-            ivf_top,
-            (F.col("query_id") == F.col("l_qid"))
-            & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("l_nid").alias("n_overlap"),
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias(
-                "recall"
-            ),
-        )
-        .orderBy("query_id")
+    ivf_top = _knn_ivfpq_ranked(spark, sf_dir).select("query_id", "neighbor_id")
+    return _overlap_recall(_knn_exact_top(e), ivf_top, "query_id").orderBy(
+        "query_id"
     )
 
 
@@ -4686,53 +4573,12 @@ def knn_ivfpq_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric isolates index approximation, not filter disagreement."""
     e = load_table(spark, sf_dir, "embeddings")
     allowed = _knn_allowed(spark, sf_dir)
-    # r14 (guide §2.3, the item-14 shape): per-side norms factored below
-    # the eligible-corpus x query-sample cross join — one fold per pair;
-    # operand order matches cosine_sim(cv, qv) bit-for-bit.
-    q = e.where(F.col("vec_id") % KNN_QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("qn"),
-    )
-    cand = e.join(allowed, "vec_id", "left_semi").select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("cv"),
-        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("cn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(cand)
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
-    )
     ivf_top = _knn_ivfpq_ranked(spark, sf_dir, allowed=allowed).select(
-        F.col("query_id").alias("l_qid"), F.col("neighbor_id").alias("l_nid")
+        "query_id", "neighbor_id"
     )
-    return (
-        exact_top.join(
-            ivf_top,
-            (F.col("query_id") == F.col("l_qid"))
-            & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count("l_nid").alias("n_overlap"),
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias(
-                "recall"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _overlap_recall(
+        _knn_exact_top(e, allowed), ivf_top, "query_id"
+    ).orderBy("query_id")
 
 
 SQ8_UNIT_SCALE = 10**6  # fixed-point digits for per-element units
@@ -4862,38 +4708,15 @@ def sq8_retrieval_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     paired = codes.join(F.broadcast(qs)).where(
         F.col("vec_id") != F.col("query_id")
     )
-    w8 = Window.partitionBy("query_id").orderBy("d8", "vec_id")
-    sq8_top = (
-        paired.select("query_id", "vec_id", _isum("qa", "qqa").alias("d8"))
-        .select("query_id", "vec_id", F.row_number().over(w8).alias("rnk"))
-        .where(F.col("rnk") <= SQ8_K)
-        .select("query_id", "vec_id")
-    )
-    wx = Window.partitionBy("query_id").orderBy("dx", "vec_id")
-    exact_top = (
-        paired.select("query_id", "vec_id", _isum("xu", "qxu").alias("dx"))
-        .select("query_id", "vec_id", F.row_number().over(wx).alias("rnk"))
-        .where(F.col("rnk") <= SQ8_K)
-        .select(
-            F.col("query_id").alias("x_qid"), F.col("vec_id").alias("x_vid")
-        )
-    )
-    return (
-        exact_top.join(
-            sq8_top,
-            (F.col("x_qid") == F.col("query_id"))
-            & (F.col("x_vid") == F.col("vec_id")),
-            "left",
-        )
-        .groupBy(F.col("x_qid").alias("query_id"))
-        .agg(
-            F.count("vec_id").alias("n_overlap"),
-            (F.count("vec_id").cast("double") / F.count(F.lit(1))).alias(
-                "recall"
-            ),
-        )
-        .orderBy("query_id")
-    )
+
+    def ranked(a: str, b: str, score: str) -> DataFrame:
+        d = _isum(a, b).alias(score)
+        pairs = paired.select("query_id", F.col("vec_id").alias("nid"), d)
+        return _rank_top(pairs, SQ8_K, score)
+
+    return _overlap_recall(
+        ranked("xu", "qxu", "dx"), ranked("qa", "qqa", "d8"), "query_id"
+    ).orderBy("query_id")
 
 
 @register(
@@ -5050,8 +4873,6 @@ def ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     model artifact is K rows) and the probed fraction is nprobe/K of
     the corpus per query — the IVF contract. Reference parity:
     extension mandate (LLM-pipeline battery)."""
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     e = load_table(spark, sf_dir, "embeddings")
     seeds_rows = (
         e.where(F.col("vec_id") < IVF_T_K)
@@ -5139,39 +4960,18 @@ def ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("metric"),
     )
-    topk = salted_topk(
-        stacked,
-        ["qid", "metric"],
-        [F.asc("d2"), F.col("vec_id")],
-        IVF_T_TOPK,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "seeded").alias("hit_seeded"),
-            F.max(F.col("metric") == "trained").alias("hit_trained"),
-        )
-        .where("in_exact")
-    )
     return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("hit_seeded").cast("bigint")).alias("n_hits_seeded"),
-            F.sum(F.col("hit_trained").cast("bigint")).alias(
-                "n_hits_trained"
-            ),
-            (
-                F.sum(F.col("hit_seeded").cast("bigint")).cast("double")
-                / F.lit(float(IVF_T_TOPK))
-            ).alias("recall_seeded"),
-            (
-                F.sum(F.col("hit_trained").cast("bigint")).cast("double")
-                / F.lit(float(IVF_T_TOPK))
-            ).alias("recall_trained"),
-            F.lit(int(n_iters)).cast("bigint").alias("n_iters"),
+        _stacked_recall(
+            stacked,
+            F.asc("d2"),
+            IVF_T_TOPK,
+            "exact",
+            [
+                ("seeded", "n_hits_seeded", "recall_seeded"),
+                ("trained", "n_hits_trained", "recall_trained"),
+            ],
         )
+        .select("*", F.lit(int(n_iters)).cast("bigint").alias("n_iters"))
         .orderBy("qid")
     )
 
@@ -5311,56 +5111,10 @@ def _knn_mean_recall(
     driver collect (a single aggregate row); the exact side scores the
     broadcast query set against the corpus in one narrow pass."""
     e = load_table(spark, sf_dir, "embeddings")
-    # r13 item 14 (guide §2.3): per-side norms factored out of the
-    # corpus x queries exact arm — one decimal fold per pair, operand
-    # order of dot/(cn*qn) matches cosine_sim so values (and therefore
-    # the recall scalar) are bit-identical
-    q = e.where(F.col("vec_id") % KNN_QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias("qn"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "nid")
-    exact_top = (
-        q.crossJoin(
-            e.select(
-                F.col("vec_id").alias("nid"),
-                F.col("embedding").alias("cv"),
-                F.sqrt(_dec_dot(F.col("embedding"), F.col("embedding"))).alias(
-                    "cn"
-                ),
-            )
-        )
-        .where(F.col("nid") != F.col("query_id"))
-        .select(
-            "query_id",
-            "nid",
-            cosine_from_norms(
-                _dec_dot(F.col("cv"), F.col("qv")), F.col("cn"), F.col("qn")
-            ).alias("cosine"),
-        )
-        .select("query_id", "nid", F.row_number().over(w).alias("rnk"))
-        .where(F.col("rnk") <= KNN_TOPK)
-        .select("query_id", "nid")
-    )
     approx = _knn_ivfpq_ranked(
         spark, sf_dir, index_path=index_path, artifacts=artifacts
-    ).select(
-        F.col("query_id").alias("l_qid"), F.col("neighbor_id").alias("l_nid")
-    )
-    row = (
-        exact_top.join(
-            approx,
-            (F.col("query_id") == F.col("l_qid"))
-            & (F.col("nid") == F.col("l_nid")),
-            "left",
-        )
-        .agg(
-            (F.count("l_nid").cast("double") / F.count(F.lit(1))).alias("r")
-        )
-        .first()
-    )
-    return float(row["r"])
+    ).select("query_id", "neighbor_id")
+    return float(_overlap_recall(_knn_exact_top(e), approx).first()["recall"])
 
 
 _ROUTER_SCHEMA = "alias string, index_path string, lineage string"
@@ -5933,22 +5687,21 @@ ORDER BY e.qid
 """,
 )
 def pq_recall_opq_vs_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The TRAINED rotation behind the decision probe (r12 verdict item
-    4, closing r11 item 5 for real): on the planted anisotropic fixture
-    (where ``opq_aniso_probe_fires`` shows ratios in the thousands),
-    train parametric OPQ — the serpentine eigenvalue-allocation
-    permutation over exact per-dim variances; the fixture is
-    axis-aligned so the PCA basis is the coordinate basis and the
-    permutation IS the rotation — and gate recall@{PQ_RQ_K} dominance
-    at EQUAL code bytes: a {PQ_SUBVECTORS}x{PQ_CODEBOOK} PQ trained on
-    the rotated vectors vs one trained on the raw fixture, both ranked
-    by stored-code ADC against exact ground truth. Measured: identity
-    0.025 vs OPQ 0.20-0.40 mean recall across all three SFs — the
-    imbalance the identity split wastes (its subvector 0 holds ~all
+    """The TRAINED rotation behind the decision probe: on the planted
+    anisotropic fixture (where ``opq_aniso_probe_fires`` shows ratios in
+    the thousands), train parametric OPQ — the serpentine
+    eigenvalue-allocation permutation over exact per-dim variances; the
+    fixture is axis-aligned so the PCA basis is the coordinate basis and
+    the permutation IS the rotation — and gate recall@{PQ_RQ_K}
+    dominance at EQUAL code bytes: a {PQ_SUBVECTORS}x{PQ_CODEBOOK} PQ
+    trained on the rotated vectors vs one trained on the raw fixture,
+    both ranked by stored-code ADC against exact ground truth. Measured:
+    identity 0.025 vs OPQ 0.20-0.40 mean recall across all three SFs —
+    the imbalance the identity split wastes (its subvector 0 holds ~all
     variance) is exactly what the allocation recovers. The oracle
     recomputes the fixture, the variances, the permutation, BOTH
-    trainings, and both rankings from scratch, so the hash certifies
-    the served rotation equals the trained one; dominance itself is
+    trainings, and both rankings from scratch, so the hash certifies the
+    served rotation equals the trained one; dominance itself is
     additionally pytest-gated (``tests/test_opq_fixture.py``).
 
     Plan: ONE Arrow-vectorized fixture pass scores exact + both ADC
@@ -5957,11 +5710,6 @@ def pq_recall_opq_vs_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     select (exact, no float churn); training is {_OPQ_QN} exact Lloyd
     passes per side. At 100 TB: same linear-pass economics as the
     trained-vs-init gate, plus one bounded 64-row variance collect."""
-    import numpy as np
-    import pandas as pd
-
-    from otus_cpp_11_spark.ops.skew import salted_topk
-
     fx = _opq_fixture(spark, sf_dir)
     posmap = _opq_posmap(spark, sf_dir)
     fo = _opq_rotated(fx, posmap)
@@ -5973,103 +5721,20 @@ def pq_recall_opq_vs_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
         _TRAINED_CACHE[ko] = _pq_train(fo)
     cb_i, _, _, _ = _TRAINED_CACHE[ki]
     cb_o, _, _, _ = _TRAINED_CACHE[ko]
-    ci = _pq_slice_mat(cb_i)
-    co = _pq_slice_mat(cb_o)
-    pm = np.array(posmap, dtype=np.int64)
-    qrows = (
-        fx.where(
-            (F.col("vec_id") >= PQ_CODEBOOK)
-            & (F.col("vec_id") < PQ_CODEBOOK + PQ_RQ_N)
-        )
-        .select("vec_id", "embedding")
-        .collect()  # bounded: PQ_RQ_N eval queries
+    qids, qmat = _eval_queries(fx)
+    scored = _pq_adc_scored(
+        fx, qids, qmat, [("identity", cb_i, None), ("opq", cb_o, posmap)]
     )
-    qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array(
-        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
-    )
-    ti = np.array(
-        [_pq_dtable_slices(cb_i, list(q)) for q in qmat], dtype=np.int64
-    )
-    to = np.array(
-        [_pq_dtable_slices(cb_o, list(q[pm])) for q in qmat], dtype=np.int64
-    )
-
-    def score(batches):
-        for pdf in batches:
-            emb = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            vid = pdf["vec_id"].to_numpy()
-            n = emb.shape[0]
-            codes_i = _pq_encode_np(emb, ci)
-            codes_o = _pq_encode_np(emb[:, pm], co)
-            diffs = emb[:, None, :] - qmat[None, :, :]
-            exact = (
-                np.floor(diffs * diffs * float(PQ_SCALE))
-                .astype(np.int64)
-                .sum(axis=2)
-            )
-            adc_i = np.zeros((n, len(qids)), dtype=np.int64)
-            adc_o = np.zeros((n, len(qids)), dtype=np.int64)
-            for s in range(PQ_SUBVECTORS):
-                adc_i += ti[:, s, :][:, codes_i[:, s]].T
-                adc_o += to[:, s, :][:, codes_o[:, s]].T
-            frames = []
-            for metric, d in (
-                ("exact", exact),
-                ("identity", adc_i),
-                ("opq", adc_o),
-            ):
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": np.repeat(vid, len(qids)),
-                            "qid": np.tile(qids, n),
-                            "metric": metric,
-                            "d": d.reshape(-1),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    scored = (
-        spread(fx.select("vec_id", "embedding"))
-        .mapInPandas(
-            score, "vec_id bigint, qid bigint, metric string, d bigint"
-        )
-        .where(F.col("vec_id") != F.col("qid"))
-    )
-    topk = salted_topk(
+    return _stacked_recall(
         scored,
-        ["qid", "metric"],
-        [F.asc("d"), F.col("vec_id")],
+        F.asc("d"),
         PQ_RQ_K,
-        salt_on="vec_id",
-    )
-    hits = (
-        topk.groupBy("qid", "vec_id")
-        .agg(
-            F.max(F.col("metric") == "exact").alias("in_exact"),
-            F.max(F.col("metric") == "identity").alias("in_id"),
-            F.max(F.col("metric") == "opq").alias("in_opq"),
-        )
-        .where("in_exact")
-    )
-    return (
-        hits.groupBy("qid")
-        .agg(
-            F.sum(F.col("in_id").cast("bigint")).alias("n_hits_identity"),
-            F.sum(F.col("in_opq").cast("bigint")).alias("n_hits_opq"),
-            (
-                F.sum(F.col("in_id").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_identity"),
-            (
-                F.sum(F.col("in_opq").cast("bigint")).cast("double")
-                / F.lit(float(PQ_RQ_K))
-            ).alias("recall_opq"),
-        )
-        .orderBy("qid")
-    )
+        "exact",
+        [
+            ("identity", "n_hits_identity", "recall_identity"),
+            ("opq", "n_hits_opq", "recall_opq"),
+        ],
+    ).orderBy("qid")
 
 
 # ---------------------------------------------------------------------------

@@ -156,20 +156,9 @@ def register(
 # shared-helper caveat). Regenerate entries with
 # scripts/gen_verified_hashes.py after promoting a round's greens.
 #
-# Round-14 membership: the r13 driver report was 50/50 green; every green
-# row is promoted here at its CURRENT-source hash under the r14 hash
-# computation (which now folds in the transitive helper-function closure
-# — see query_source_hash; the fingerprint format changed, so every
-# retained pin was regenerated from code whose own source is unchanged
-# since its green row). Removed (i.e., queued for driver re-verification
-# this round): every query whose source OR helper closure changed in
-# r14's optimizations (the BM25 family, the cosine-factoring batch, the
-# curation fold, pagerank, and the _knn_ivfpq_ranked /
-# blocked_cosine_pairs / _knn_mean_recall consumers), plus the r13
-# helper-touched consumers the r13 verdict flagged as never
-# driver-re-certified (near_dup_pairs_minhash, benchmark_decontamination,
-# versioned_dml_lifecycle, versioned_change_feed, customer_cdc_merge),
-# plus the 20 oldest-vintage greens (r7-r9) as the REVERIFY queue.
+# Invariant: each entry pins the hash of code that already has a green
+# CORRECTNESS row, so this dict never certifies code that was not
+# verified; every query outside it is queued for the verification window.
 DRIVER_VERIFIED: dict[str, str] = {
     "ann_index_cdc_upsert_txn": "50720d82def7",
     "ann_index_streamed": "d75893debb1f",
@@ -242,10 +231,8 @@ DRIVER_VERIFIED: dict[str, str] = {
     "incremental_decontamination": "39f012d36133",
     "incremental_near_dup": "17cf16026932",
     "ips_policy_value": "358a89893114",
-    "ivf_pq_nprobe_recall_curve": "263071d2a132",
     "ivf_pq_top5": "0192c1d8f396",
     "ivf_train_distortion_curve": "7a49f9c235af",
-    "ivf_trained_recall": "d7305e99f958",
     "jaccard_prefix_filter_pairs": "8971859a16b7",
     "label_centroids": "8ae72a2f8c44",
     "label_whitening_residuals": "6be01292dd72",
@@ -287,9 +274,6 @@ DRIVER_VERIFIED: dict[str, str] = {
     "pq_code_assignment": "9874adada751",
     "pq_encode_arrow": "33967e174272",
     "pq_index_after_append": "c7406602140e",
-    "pq_recall_opq_vs_identity": "620a0dff5cc9",
-    "pq_recall_residual_vs_raw": "8b3cbcbec936",
-    "pq_recall_trained_vs_init": "c3c1e6c9f176",
     "pq_train_distortion_curve": "9cbce0cb7865",
     "prefix_cache_analysis": "0f785bb8eb7c",
     "prefix_counts_l1": "5ed63895ccac",
@@ -330,7 +314,6 @@ DRIVER_VERIFIED: dict[str, str] = {
     "source_mixture_weights": "b58728fd729d",
     "source_score_calibration": "a3afc764a9c9",
     "source_token_fertility": "7000295e1706",
-    "sq8_retrieval_recall": "47f89021d786",
     "sql_api_region_revenue": "d92bb321c9d2",
     "sum_of_squares": "d329251cd8e8",
     "supplier_lead_time_stats": "0fdddf2f0e03",
@@ -373,20 +356,22 @@ DRIVER_VERIFIED: dict[str, str] = {
     "word_count": "cc92d3b47a4e",
 }
 
-# Unverified queries that exceed the 50-slot window this round, ordered
-# after the rest of the unverified set (they stay gated by the local
-# oracle harness and take a slot next round). Queries added mid-round go
-# here so they don't displace the 50 already queued for driver rows.
-# Round 7: empty — new/changed queries + oldest-green re-queues fill the
-# window exactly (see the REVERIFY note).
-WINDOW_DEFER: frozenset[str] = frozenset()
+# Unverified queries that exceed the 50-slot window, ordered after the
+# rest of the unverified set (they stay gated by the local oracle harness
+# and take a slot in a later round). Vintage re-verifications go here
+# when changed code needs their slots.
+WINDOW_DEFER: frozenset[str] = frozenset({
+    "kmeans_assign_update",
+    "lineitem_measures_unpivot",
+    "lineitem_profile",
+    "q13_customer_distribution",
+    "q22_global_sales_opportunity",
+    "user_value_resample_1h_ffill",
+})
 
-# Round-14 refill (r13 ADVICE: restored members no longer double-listed —
-# this set now contains EXACTLY the queued-for-reverification names):
-# the 20 oldest-vintage greens (both r7 survivors, the r8 remainder, and
-# the alphabetically-first r9 members), ordered AFTER the round's
-# changed/helper-drifted queries by all_queries() so re-certification of
-# changed code always wins window slots over routine vintage rotation.
+# Vintage greens queued for re-certification, ordered AFTER the changed /
+# helper-drifted queries by all_queries() so re-certification of changed
+# code always wins window slots over routine vintage rotation.
 REVERIFY: frozenset[str] = frozenset({
     "bm25_stats_streamed",
     "bpe_pair_counts",
@@ -402,12 +387,6 @@ REVERIFY: frozenset[str] = frozenset({
     "events_sliding_10min_5min",
     "events_tumbling_5min",
     "events_user_sketches",
-    "kmeans_assign_update",
-    "lineitem_measures_unpivot",
-    "lineitem_profile",
-    "q13_customer_distribution",
-    "q22_global_sales_opportunity",
-    "user_value_resample_1h_ffill",
 })
 
 

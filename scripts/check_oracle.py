@@ -77,6 +77,31 @@ def compare(name, spark_df, con, sql):
     return status == "OK"
 
 
+def check_query(name, fn, spark, sf_dir, con, sql) -> bool:
+    """Run one query and print its status line; never raises. With no
+    oracle ``sql`` the query only has to produce rows. A query that
+    raises prints an ERR line and counts as failed."""
+    try:
+        if sql is None:
+            n = fn(spark, sf_dir).count()
+            print(f"SKIP  {name:32s} rows={n:6d} (no oracle: rows-only)")
+            return True
+        return compare(name, fn(spark, sf_dir), con, sql)
+    except Exception as e:
+        first = (str(e).splitlines() or [""])[0]
+        print(f"ERR   {name:32s} {type(e).__name__}: {first[:140]}")
+        return False
+
+
+def check_all(qs, oracles, spark, sf_dir, con) -> list[str]:
+    """Check every query in ``qs`` (name -> fn); return the failed names."""
+    return [
+        name
+        for name, fn in qs.items()
+        if not check_query(name, fn, spark, sf_dir, con, oracles.get(name))
+    ]
+
+
 def main():
     args = sys.argv[1:]
     sf_dir = args[0] if args and "/" in args[0] else SF_DIR_DEFAULT
@@ -95,21 +120,13 @@ def main():
         )
 
     spark = get_spark(app_name="oracle-check")
-    failed = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        if name not in oracles:
-            n = fn(spark, sf_dir).count()
-            print(f"SKIP  {name:32s} rows={n:6d} (no oracle: rows-only)")
-            continue
-        try:
-            ok = compare(name, fn(spark, sf_dir), con, oracles[name])
-        except Exception as e:
-            ok = False
-            print(f"ERR   {name:32s} {type(e).__name__}: {str(e).splitlines()[0][:140]}")
-        if not ok:
-            failed.append(name)
+    failed = check_all(
+        {n: fn for n, fn in qs.items() if not only or n in only},
+        oracles,
+        spark,
+        sf_dir,
+        con,
+    )
     spark.stop()
     if failed:
         print(f"\nFAILED ({len(failed)}): {failed}")
